@@ -5,9 +5,15 @@ Confluent magic byte — a bare ``binaryDecoder`` over the whole message,
 AbstractAvroDeserializeService.java:46-60 in the reference). Spark's own
 ``from_avro`` lives in the external ``spark-avro`` jar, which is not part of
 a stock PySpark install; this module provides the same semantics with zero
-JVM dependencies. ``spark_integration.decode_avro`` (streaming/ingest.py)
-prefers the JVM path when the jar is present and falls back to this codec
-via an Arrow-batched ``mapInPandas`` otherwise.
+JVM dependencies. ``decode_avro`` (streaming/ingest.py) prefers the JVM
+path when the jar is present and falls back to this codec via an
+Arrow-batched ``mapInPandas`` otherwise.
+
+Decoding is one compiler, :func:`compile_decoder`: it walks a (writer,
+reader) pair of schema trees once and returns a tree of closures, so plain
+decoding (reader = writer), Avro schema resolution and OCF blocks share one
+code path; a reader union takes Avro's best branch (exact type/name match,
+else a promotion).
 
 Supported: the full Avro 1.x type lattice the reference's registry can feed
 it — null, boolean, int, long, float, double, bytes, string, record (incl.
@@ -25,20 +31,23 @@ when users bring richer schemas.)
 Multi-branch non-null unions follow spark-avro: ``[int, long]`` widens to
 LongType, ``[float, double]`` to DoubleType, and any other non-null
 multi-branch union becomes a struct of nullable ``member0..memberN-1``
-fields (one per non-null branch, exactly one set per value). The reference
-would throw on any schema it didn't expect
-(AbstractAvroDeserializeService.java:56-59); we keep fail-fast only for
-shapes Spark itself cannot type (recursive records).
+fields (one per non-null branch, exactly one set per value), with or
+without a reader schema. The reference would throw on any schema it didn't
+expect (AbstractAvroDeserializeService.java:56-59); we fail fast only on
+shapes Spark cannot type (recursive records) and reader schemas that can
+never resolve.
 """
 
 from __future__ import annotations
 
+import copy
 import datetime as dt
 import decimal
+import functools
 import io
 import json
 import struct
-from typing import Any
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import types as T
 
@@ -317,21 +326,63 @@ class _Reader:
         return out
 
 
-def _from_logical(node: dict, v: Any) -> Any:
-    """Base-decoded value → Python value for a logical-typed primitive.
-    Timestamps come back tz-naive in UTC (the session tz this repo pins)."""
+Decoder = Callable[[_Reader], Any]
+
+
+def _read_boolean(r: _Reader) -> bool:
+    v = r.buf[r.pos] != 0
+    r.pos += 1
+    return v
+
+
+def _read_ieee(fmt: str, size: int) -> Decoder:
+    def read(r: _Reader) -> float:
+        (v,) = struct.unpack_from(fmt, r.buf, r.pos)
+        r.pos += size
+        return v
+
+    return read
+
+
+def _read_string(r: _Reader) -> str:
+    return r.read_bytes().decode("utf-8")
+
+
+def _blocks(r: _Reader) -> Iterator[int]:
+    """Item counts of an array's or map's blocks."""
+    n = r.read_long()
+    while n:
+        if n < 0:  # block with byte-size prefix
+            n = -n
+            r.read_long()
+        yield n
+        n = r.read_long()
+
+
+_READ_PRIMITIVE = {
+    "null": lambda r: None,
+    "boolean": _read_boolean,
+    "int": _Reader.read_long,
+    "long": _Reader.read_long,
+    "float": _read_ieee("<f", 4),
+    "double": _read_ieee("<d", 8),
+    "bytes": _Reader.read_bytes,
+    "string": _read_string,
+}
+
+
+def _from_logical(node: dict) -> Callable[[Any], Any]:
+    """Base value → Python value for a logical-typed node. Timestamps come
+    back tz-naive in UTC (the session tz this repo pins)."""
     lt = node["logicalType"]
     if lt == "date":
-        return _EPOCH_DATE + dt.timedelta(days=v)
+        return lambda v: _EPOCH_DATE + dt.timedelta(days=v)
     if lt in ("timestamp-millis", "local-timestamp-millis"):
-        return _EPOCH_DT + dt.timedelta(milliseconds=v)
+        return lambda v: _EPOCH_DT + dt.timedelta(milliseconds=v)
     if lt in ("timestamp-micros", "local-timestamp-micros"):
-        return _EPOCH_DT + dt.timedelta(microseconds=v)
-    if lt == "decimal":  # bytes: two's-complement big-endian unscaled
-        return decimal.Decimal(int.from_bytes(v, "big", signed=True)).scaleb(
-            -node["scale"]
-        )
-    return v
+        return lambda v: _EPOCH_DT + dt.timedelta(microseconds=v)
+    scale = -node["scale"]  # decimal: two's-complement big-endian unscaled
+    return lambda v: decimal.Decimal(int.from_bytes(v, "big", signed=True)).scaleb(scale)
 
 
 def _to_base(node: dict, v: Any) -> Any:
@@ -355,106 +406,22 @@ def _to_base(node: dict, v: Any) -> Any:
     return v
 
 
-def _decode(schema: Any, r: _Reader) -> Any:
-    if isinstance(schema, str):
-        if schema == "null":
-            return None
-        if schema == "boolean":
-            v = r.buf[r.pos] != 0
-            r.pos += 1
-            return v
-        if schema in ("int", "long"):
-            return r.read_long()
-        if schema == "float":
-            (v,) = struct.unpack_from("<f", r.buf, r.pos)
-            r.pos += 4
-            return v
-        if schema == "double":
-            (v,) = struct.unpack_from("<d", r.buf, r.pos)
-            r.pos += 8
-            return v
-        if schema == "bytes":
-            return r.read_bytes()
-        if schema == "string":
-            return r.read_bytes().decode("utf-8")
-        raise ValueError(f"unknown primitive {schema!r}")
-    if isinstance(schema, list):  # union: varint branch index, then value
-        idx = r.read_long()
-        branch = schema[idx]
-        if branch == "null":
-            return None
-        if len(schema) <= 2:  # ["null", X] / [X] — the hot path (every
-            return _decode(branch, r)  # nullable field) stays allocation-free
-        non_null = [b for b in schema if b != "null"]
-        if len(non_null) == 1:
-            return _decode(branch, r)
-        names = {_type_name(b) for b in non_null}
-        if names == {"int", "long"} or names == {"float", "double"}:
-            return _decode(branch, r)  # widened scalar (spark-avro semantics)
-        mi = non_null.index(branch)
-        v = _decode(branch, r)
-        return {f"member{i}": (v if i == mi else None) for i in range(len(non_null))}
-    t = schema["type"]
-    if t == "record":
-        return {f["name"]: _decode(f["type"], r) for f in schema["fields"]}
-    if t == "enum":
-        return schema["symbols"][r.read_long()]
-    if t == "fixed":
-        raw = r.read_fixed(schema["size"])
-        if schema.get("logicalType") == "decimal":
-            return decimal.Decimal(int.from_bytes(raw, "big", signed=True)).scaleb(
-                -schema["scale"]
-            )
-        return raw
-    if t in _PRIMITIVES:  # logical-typed primitive node
-        return _from_logical(schema, _decode(t, r))
-    if t == "array":
-        out = []
-        while True:
-            n = r.read_long()
-            if n == 0:
-                break
-            if n < 0:  # block with byte-size prefix
-                n = -n
-                r.read_long()
-            for _ in range(n):
-                out.append(_decode(schema["items"], r))
-        return out
-    if t == "map":
-        out = {}
-        while True:
-            n = r.read_long()
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                r.read_long()
-            for _ in range(n):
-                k = r.read_bytes().decode("utf-8")
-                out[k] = _decode(schema["values"], r)
-        return out
-    raise ValueError(f"unsupported Avro type: {t!r}")
-
-
-def decode_record(schema: Any, payload: bytes) -> dict:
-    """Decode one binary-Avro payload (whole message, no magic byte) —
-    the reference's ``deserializeAvro`` semantics."""
-    return _decode(schema, _Reader(payload))
-
-
 # ---------------------------------------------------------------------------
-# Schema resolution (Avro spec §"Schema Resolution"): decode a payload
-# written with WRITER schema W under READER schema R — the rolling-upgrade
-# contract. The reference pins one schema per topic forever
-# (AbstractAvroDeserializeService.java:28-34) and crashes on any change;
-# this implements the spec rules: match record fields by name (writer
-# order drives the byte stream), skip writer-only fields, fill
-# reader-only fields from their defaults, apply the promotion lattice
-# (int→long/float/double, long→float/double, float→double,
-# string⇄bytes), resolve union branches writer-side then match the
-# reader union, and accept enum symbols present in the reader (falling
-# back to the reader's enum ``default`` per Avro 1.9+).
+# The decoder compiler. Avro schema resolution (spec §"Schema Resolution"):
+# data written with WRITER schema W is read as READER schema R, the
+# rolling-upgrade contract the reference lacks (it pins one schema per
+# topic, AbstractAvroDeserializeService.java:28-34). Each rule is settled
+# once, at compile time: fields match by name (writer order drives the byte
+# stream), writer-only fields are read and dropped, reader-only fields take
+# their defaults, the promotion lattice applies (int→long/float/double,
+# long→float/double, float→double, string⇄bytes), enum symbols map to the
+# reader's (else its ``default``), and a reader union takes the best branch:
+# the writer's own type (same name for named types), else the first it
+# promotes to. Errors that depend on the data (a writer-union branch with no
+# reader match, an enum symbol with no reader default) raise when decoded.
 # ---------------------------------------------------------------------------
+
+_NAMED = ("record", "enum", "fixed")
 
 _PROMOTABLE = {
     "int": {"int", "long", "float", "double"},
@@ -468,37 +435,47 @@ _PROMOTABLE = {
 }
 
 
-def _promote(v: Any, w_t: str, r_t: str) -> Any:
-    if w_t == r_t or v is None:
-        return v
-    if r_t in ("float", "double"):
-        return float(v)
-    if r_t == "long":
-        return int(v)
-    if r_t == "bytes":
-        return v.encode("utf-8") if isinstance(v, str) else v
-    if r_t == "string":
-        return v.decode("utf-8") if isinstance(v, (bytes, bytearray)) else v
-    return v
+def _then(dec: Decoder, conv: Callable[[Any], Any] | None) -> Decoder:
+    return dec if conv is None else (lambda r: conv(dec(r)))
 
 
-def _match(w: Any, rd: Any) -> bool:
-    """Can a writer-branch value resolve against reader node ``rd``?"""
-    wt, rt = _type_name(w), _type_name(rd)
-    if wt in _PROMOTABLE:
-        return rt in _PROMOTABLE[wt]
-    if wt in ("record", "enum", "fixed"):
-        return rt == wt and (
-            not (isinstance(w, dict) and isinstance(rd, dict))
-            or w.get("name") == rd.get("name")
-        )
-    return wt == rt  # array/map/union by shape
+def _promotion(wt: str, rt: str) -> Callable[[Any], Any] | None:
+    if wt == rt or rt == "long":
+        return None
+    if rt in ("float", "double"):
+        return float
+    if rt == "bytes":
+        return lambda v: v.encode("utf-8")
+    return lambda v: v.decode("utf-8")  # bytes → string
+
+
+def _member_names(union: list) -> list[str] | None:
+    """The spark-avro shape of a union value (see to_spark_type): None for
+    a bare value (``["null", X]`` or a widened numeric pair), else the
+    names of its ``member0..N-1`` struct, one per non-null branch."""
+    non_null = [b for b in union if b != "null"]
+    if len(non_null) < 2 or {_type_name(b) for b in non_null} in ({"int", "long"}, {"float", "double"}):
+        return None
+    return [f"member{i}" for i in range(len(non_null))]
+
+
+def _best_branch(w: Any, union: list) -> int:
+    wt = _type_name(w)
+    for fits in (lambda bt: bt == wt, lambda bt: bt in _PROMOTABLE.get(wt, ())):
+        for i, b in enumerate(union):
+            if fits(_type_name(b)) and (wt not in _NAMED or b["name"] == w["name"]):
+                return i
+    raise ValueError(
+        f"schema resolution: writer {wt!r} matches no reader union branch "
+        f"{[_type_name(b) for b in union]!r}"
+    )
 
 
 def _default_value(rd: Any, d: Any) -> Any:
     """A reader field's JSON default → the decoded-value representation."""
     if isinstance(rd, list):  # union default applies to the FIRST branch
-        return _default_value(rd[0], d)
+        v, members = _default_value(rd[0], d), _member_names(rd)
+        return v if members is None or rd[0] == "null" else {**dict.fromkeys(members), members[0]: v}
     if isinstance(rd, str):
         if rd == "null":
             return None
@@ -511,125 +488,155 @@ def _default_value(rd: Any, d: Any) -> Any:
         return d
     t = rd["type"]
     if t == "record":
+        d = d or {}
         return {
-            f["name"]: _default_value(
-                f["type"], (d or {}).get(f["name"], f.get("default"))
-            )
-            for f in rd["fields"]
+            f["name"]: _default_value(f["type"], d.get(f["name"], f.get("default"))) for f in rd["fields"]
         }
     if t == "array":
         return [_default_value(rd["items"], x) for x in (d or [])]
     if t == "map":
         return {k: _default_value(rd["values"], x) for k, x in (d or {}).items()}
     if t == "fixed":
-        return d.encode("latin-1") if isinstance(d, str) else d
+        d = d.encode("latin-1") if isinstance(d, str) else d
+        return _from_logical(rd)(d) if rd.get("logicalType") == "decimal" else d
     if t in _PRIMITIVES:  # logical-typed primitive: defaults are base-typed
-        return _from_logical(rd, _default_value(t, d))
+        return _from_logical(rd)(_default_value(t, d))
     return d  # enum: the symbol string
 
 
-def _decode_resolved(w: Any, rd: Any, r: _Reader) -> Any:
-    # unions first: the writer union picks the branch from the byte
-    # stream; the branch then resolves against the reader node
-    if isinstance(w, list):
-        branch = w[r.read_long()]
-        return _resolve_value(branch, rd, r)
-    return _resolve_value(w, rd, r)
+def _fail(msg: str, r: _Reader) -> Any:
+    raise ValueError(msg)
 
 
-def _resolve_value(w: Any, rd: Any, r: _Reader) -> Any:
-    if isinstance(rd, list):  # reader union: first matching branch wins
-        for b in rd:
-            if _match(w, b):
-                return _resolve_value(w, b, r)
+def _field_default(f: dict) -> Any:
+    """A reader-only field's value: its default (null for a null-first union)."""
+    if "default" not in f and not (isinstance(f["type"], list) and f["type"][0] == "null"):
         raise ValueError(
-            f"schema resolution: writer {_type_name(w)!r} matches no reader "
-            f"union branch {[_type_name(b) for b in rd]!r}"
+            f"schema resolution: reader field {f['name']!r} absent from writer and has no default"
         )
+    return _default_value(f["type"], f.get("default"))
+
+
+def compile_decoder(writer: Any, reader: Any = None) -> Decoder:
+    """Compile the decoder of payloads written with ``writer`` and read as
+    ``reader`` (both parse_schema trees; ``reader=None`` decodes plainly,
+    as ``reader = writer``). The result maps a ``_Reader`` positioned at a
+    value to the decoded value. A reader that can never resolve against
+    the writer raises ValueError here, before any data is read."""
+    return _compile(writer, writer if reader is None else reader, {})
+
+
+def _compile(w: Any, rd: Any, memo: dict) -> Decoder:
+    if isinstance(w, list):  # writer union: the branch index is in the stream
+        branches = []
+        for b in w:
+            try:
+                branches.append(_compile(b, rd, memo))
+            except ValueError as e:  # an unmatched branch fails when it occurs
+                branches.append(functools.partial(_fail, str(e)))
+        return lambda r: branches[r.read_long()](r)
+    if isinstance(rd, list):  # reader union: the best branch, in its shape
+        i = _best_branch(w, rd)
+        dec, members = _compile(w, rd[i], memo), _member_names(rd)
+        if members is None or rd[i] == "null":
+            return dec
+        empty, key = dict.fromkeys(members), members[i - rd[:i].count("null")]
+        return lambda r: {**empty, key: dec(r)}
     wt, rt = _type_name(w), _type_name(rd)
     if wt in _PROMOTABLE:
         if rt not in _PROMOTABLE[wt]:
             raise ValueError(f"schema resolution: cannot promote {wt!r} to {rt!r}")
-        v = _decode(w, r)
-        base = _promote(v, wt, rt)
+        dec = _READ_PRIMITIVE[wt]
+        if isinstance(w, dict):  # the writer's logical type converts first
+            dec = _then(dec, _from_logical(w))
+        dec = _then(dec, _promotion(wt, rt))
         # the reader's logical annotation applies only when the writer had
-        # none — a logical writer node already converted inside _decode,
-        # and converting twice would corrupt the value
-        if isinstance(rd, dict) and not isinstance(w, dict):
-            return _from_logical(rd, base)
-        return base
+        # none: converting twice would corrupt the value
+        return _then(dec, _from_logical(rd) if isinstance(rd, dict) and isinstance(w, str) else None)
+    if rt != wt or (wt in _NAMED and w["name"] != rd["name"]):
+        raise ValueError(
+            f"schema resolution: writer {w.get('name', wt)!r} vs reader "
+            f"{rd if isinstance(rd, str) else rd.get('name', rt)!r}"
+        )
     if wt == "record":
-        if rt != "record" or w.get("name") != rd.get("name"):
-            raise ValueError(
-                f"schema resolution: record {w.get('name')!r} vs reader {rt!r}"
-            )
-        r_fields = {f["name"]: f for f in rd["fields"]}
-        out: dict = {}
-        for f in w["fields"]:
-            if f["name"] in r_fields:
-                out[f["name"]] = _decode_resolved(
-                    f["type"], r_fields[f["name"]]["type"], r
-                )
-            else:
-                _decode(f["type"], r)  # writer-only: decode and discard
-        for f in rd["fields"]:
-            if f["name"] not in out:
-                if "default" not in f and not (
-                    isinstance(f["type"], list) and f["type"][0] == "null"
-                ):
-                    raise ValueError(
-                        f"schema resolution: reader field {f['name']!r} absent "
-                        "from writer and has no default"
-                    )
-                out[f["name"]] = _default_value(f["type"], f.get("default"))
-        return out
+        key = (id(w), id(rd))
+        if key in memo:  # recursive record: bound once its decoder exists
+            cell = memo[key]
+            return lambda r: cell[0](r)
+        cell = memo[key] = [None]
+        try:
+            r_types = {f["name"]: f["type"] for f in rd["fields"]}
+            steps = [  # writer-only fields decode under the key None
+                (f["name"] if f["name"] in r_types else None,
+                 _compile(f["type"], r_types.get(f["name"], f["type"]), memo))
+                for f in w["fields"]
+            ]
+            written = {f["name"] for f in w["fields"]}
+            defaults = {f["name"]: _field_default(f) for f in rd["fields"] if f["name"] not in written}
+        except ValueError:
+            del memo[key]
+            raise
+
+        def record(r: _Reader) -> dict:
+            out = {name: dec(r) for name, dec in steps}
+            out.pop(None, None)
+            if defaults:
+                out.update(copy.deepcopy(defaults))
+            return out
+
+        cell[0] = record
+        return record
     if wt == "enum":
-        sym = w["symbols"][r.read_long()]
-        if sym in rd["symbols"]:
-            return sym
-        if "default" in rd:
-            return rd["default"]
-        raise ValueError(f"schema resolution: enum symbol {sym!r} not in reader")
-    if wt == "array":
-        if rt != "array":
-            raise ValueError("schema resolution: array vs non-array reader")
-        out_l: list = []
-        while True:
-            n = r.read_long()
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                r.read_long()
-            for _ in range(n):
-                out_l.append(_decode_resolved(w["items"], rd["items"], r))
-        return out_l
-    if wt == "map":
-        if rt != "map":
-            raise ValueError("schema resolution: map vs non-map reader")
-        out_m: dict = {}
-        while True:
-            n = r.read_long()
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                r.read_long()
-            for _ in range(n):
-                k = r.read_bytes().decode("utf-8")
-                out_m[k] = _decode_resolved(w["values"], rd["values"], r)
-        return out_m
+        symbols = set(rd["symbols"])
+        table = [s if s in symbols else rd.get("default", s) for s in w["symbols"]]
+
+        def enum(r: _Reader) -> str:
+            s = table[r.read_long()]
+            if s not in symbols:
+                raise ValueError(f"schema resolution: enum symbol {s!r} not in reader")
+            return s
+
+        return enum
     if wt == "fixed":
-        if rt != "fixed" or w["size"] != rd["size"]:
+        if w["size"] != rd["size"]:
             raise ValueError("schema resolution: fixed name/size mismatch")
-        return _decode(rd, r)  # reader's logical annotation applies
-    raise ValueError(f"schema resolution: unsupported writer type {wt!r}")
+        size, logical = w["size"], rd.get("logicalType") == "decimal"
+        return _then(lambda r: r.read_fixed(size), _from_logical(rd) if logical else None)
+    if wt == "array":
+        item = _compile(w["items"], rd["items"], memo)
+        return lambda r: [item(r) for n in _blocks(r) for _ in range(n)]
+    if wt != "map":
+        raise ValueError(f"unsupported Avro type: {wt!r}")
+    value = _compile(w["values"], rd["values"], memo)
+    return lambda r: {_read_string(r): value(r) for n in _blocks(r) for _ in range(n)}
+
+
+# Compiled decoders for the per-record entry points below, keyed on the
+# identity of the trees; an entry holds its trees, so no id is reused
+# while it is cached.
+_COMPILED: dict[tuple[int, int], tuple[Any, Any, Decoder]] = {}
+
+
+def _cached(writer: Any, reader: Any) -> Decoder:
+    key = (id(writer), id(reader))
+    hit = _COMPILED.get(key)
+    if hit is None:
+        if len(_COMPILED) >= 64:
+            _COMPILED.clear()
+        hit = _COMPILED[key] = (writer, reader, compile_decoder(writer, reader))
+    return hit[2]
+
+
+def decode_record(schema: Any, payload: bytes) -> dict:
+    """Decode one binary-Avro payload (whole message, no magic byte) —
+    the reference's ``deserializeAvro`` semantics."""
+    return _cached(schema, schema)(_Reader(payload))
 
 
 def decode_record_resolved(writer: Any, reader: Any, payload: bytes) -> dict:
     """Decode one binary payload written with ``writer`` under ``reader``
     (both parse_schema trees) per Avro schema resolution."""
-    return _decode_resolved(writer, reader, _Reader(payload))
+    return _cached(writer, reader)(_Reader(payload))
 
 
 # ---------------------------------------------------------------------------

@@ -31,10 +31,11 @@ from typing import Any, Iterable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_etl_consumer_spark.avro_codec import (
-    _decode,
+    _blocks,
     _Reader,
     _Writer,
     _encode,
+    compile_decoder,
     parse_schema,
     to_spark_struct,
 )
@@ -48,13 +49,7 @@ def read_ocf(data: bytes) -> tuple[dict, list[dict]]:
     if r.read_fixed(4) != _MAGIC:
         raise ValueError("not an Avro object container file (bad magic)")
     meta: dict[str, bytes] = {}
-    while True:
-        n = r.read_long()
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            r.read_long()  # skip byte-size prefix
+    for n in _blocks(r):
         for _ in range(n):
             key = r.read_bytes().decode("utf-8")
             meta[key] = r.read_bytes()
@@ -63,6 +58,7 @@ def read_ocf(data: bytes) -> tuple[dict, list[dict]]:
         raise ValueError(f"unsupported OCF codec {codec!r} (null|deflate)")
     schema = parse_schema(meta["avro.schema"].decode("utf-8"))
     sync = r.read_fixed(16)
+    decode = compile_decoder(schema)
     records: list[dict] = []
     while r.pos < len(data):
         count = r.read_long()
@@ -72,7 +68,7 @@ def read_ocf(data: bytes) -> tuple[dict, list[dict]]:
             block = zlib.decompress(block, -15)  # raw deflate per spec
         br = _Reader(block)
         for _ in range(count):
-            records.append(_decode(schema, br))
+            records.append(decode(br))
         if r.read_fixed(16) != sync:
             raise ValueError("OCF sync marker mismatch (corrupt block)")
     return schema, records

@@ -43,8 +43,8 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.storagelevel import StorageLevel
 
 from kafka_etl_consumer_spark.avro_codec import (
-    decode_record,
-    decode_record_resolved,
+    _Reader,
+    compile_decoder,
     encode_record,
     parse_schema,
     to_spark_struct,
@@ -126,21 +126,20 @@ def decode_avro(
     ``reader_avsc``: full Avro schema resolution (the spec's rolling-upgrade
     contract; the reference pins one schema per topic forever,
     AbstractAvroDeserializeService.java:28-34 of the reference — a schema
-    change breaks it). Payloads decode with the WRITER schema ``avsc``
-    under the reader schema at the CODEC level
-    (avro_codec.decode_record_resolved): reader-added fields take their
-    declared ``default`` (null-union fields default to null), writer-only
-    fields are decoded and discarded, the promotion lattice applies
-    (int→long/float/double, long→float/double, float→double,
-    string⇄bytes), union branches re-match against the reader union, and
-    enum symbols fall back to the reader's enum ``default``. Output
-    columns and types come from the reader schema. Always the Python
-    decoder path — JVM ``from_avro`` takes one schema with no
-    reader/writer split.
+    change breaks it). Payloads written with ``avsc`` decode under the
+    reader schema through ``avro_codec.compile_decoder`` (defaults, dropped
+    fields, promotions, union branches and enum fallback per the spec);
+    output columns and types come from the reader schema. A reader schema
+    that can never resolve raises ValueError here, when the query is built.
+    Always the Python decoder path — JVM ``from_avro`` takes one schema
+    with no reader/writer split.
 
     Prefers the JVM ``from_avro`` (whole-stage codegen, zero Python) when
     spark-avro is loaded; otherwise decodes with the pure-Python codec in
-    Arrow-batched ``mapInPandas`` — still partition-parallel, ~100k msg/s/core.
+    Arrow-batched ``mapInPandas`` — still partition-parallel; the decoder
+    alone measured 16–31 µs per record single-threaded (30–60k msg/s/core)
+    on the perfbench payloads, on a shared 4-core x86 host
+    (``perfbench/run.py --trace 1``, ``avro_codec.decode_us_per_rec``).
     ``corrupt_col`` always uses the Python decoder: JVM PERMISSIVE
     ``from_avro`` yields an all-null-FIELDS row for a corrupt payload, never
     a null struct, so there is no JVM-side signal to capture the raw bytes
@@ -165,17 +164,11 @@ def decode_avro(
         base = df.select(*keep, rec.alias("__r"))
         return base.select(*keep, "__r.*")
 
-    schema_tree = parse_schema(avsc)
-    if reader_avsc is not None:
-        reader_tree = parse_schema(reader_avsc)
-
-        def _dec(payload: bytes) -> dict:
-            return decode_record_resolved(schema_tree, reader_tree, payload)
-    else:
-
-        def _dec(payload: bytes) -> dict:
-            return decode_record(schema_tree, payload)
-
+    # built once on the driver: a reader schema that can never resolve
+    # fails here, not on every row
+    decode = compile_decoder(
+        parse_schema(avsc), None if reader_avsc is None else parse_schema(reader_avsc)
+    )
     field_names = [f.name for f in struct_schema.fields]
     permissive = mode.upper() == "PERMISSIVE"
     if permissive:
@@ -195,7 +188,7 @@ def decode_avro(
             records, bad = [], []
             for payload in pdf[value_col]:
                 try:
-                    records.append(_dec(bytes(payload)))
+                    records.append(decode(_Reader(bytes(payload))))
                     bad.append(None)
                 except Exception:
                     if not permissive:
@@ -246,8 +239,6 @@ def encode_avro(df: DataFrame, avsc: str, value_col: str = "value") -> DataFrame
 # ---------------------------------------------------------------------------
 # Partition-path derivation (K2)
 # ---------------------------------------------------------------------------
-
-_JAVA_TO_SPARK_FMT = {}  # SimpleDateFormat and Spark patterns agree for y/M/d/H/m
 
 
 def partition_columns(

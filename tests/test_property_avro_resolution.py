@@ -29,6 +29,8 @@ _WRITER_JSON = """{
     {"name": "s", "type": "string"},
     {"name": "b", "type": "bytes"},
     {"name": "u", "type": ["null", "int"]},
+    {"name": "u3", "type": ["null", "int", "string"]},
+    {"name": "ub", "type": ["null", "string", "bytes"]},
     {"name": "arr", "type": {"type": "array", "items": "int"}},
     {"name": "m", "type": {"type": "map", "values": "string"}},
     {"name": "sub", "type": {"type": "record", "name": "Sub",
@@ -45,6 +47,16 @@ _records = st.fixed_dictionaries(
         "s": st.text(max_size=20),
         "b": st.binary(max_size=20),
         "u": st.one_of(st.none(), st.integers(-(2**31), 2**31 - 1)),
+        "u3": st.one_of(
+            st.none(),
+            st.integers(-(2**31), 2**31 - 1).map(lambda v: {"member0": v, "member1": None}),
+            st.text(max_size=8).map(lambda v: {"member0": None, "member1": v}),
+        ),
+        "ub": st.one_of(
+            st.none(),
+            st.text(max_size=8).map(lambda v: {"member0": v, "member1": None}),
+            st.binary(max_size=8).map(lambda v: {"member0": None, "member1": v}),
+        ),
         "arr": st.lists(st.integers(-(2**31), 2**31 - 1), max_size=5),
         "m": st.dictionaries(st.text(max_size=8), st.text(max_size=8), max_size=4),
         "sub": st.fixed_dictionaries(
